@@ -43,7 +43,7 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 def entry(spark: SparkSession) -> DataFrame:
-    """Flagship: CDC latest-state reduction (salted two-phase max-LSN dedup,
+    """Flagship: CDC latest-state reduction (one-shuffle max-LSN dedup,
     the engine's core operator) over the sf0.001 events stream."""
     return _q_cdc_latest_state(spark, "/root/testdata/sf0.001")
 

@@ -1,8 +1,8 @@
 """Benchmark harness: headline queries at $SPARK_GRAFT_SF_DIR (default
 /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS], plus the engine's primary
 metric — CDC MERGE-apply throughput (change-events/sec) on a synthetic
-change log ingested through the full pipeline (generate → sanitize → salted
-dedup → exactly-once MERGE → lineage).
+change log ingested through the full pipeline (generate → dedup → sanitize
+winners → exactly-once MERGE → lineage).
 
 Prints ONE JSON line:
   {"metric": "...", "value": <total query sec>, "unit": "sec",

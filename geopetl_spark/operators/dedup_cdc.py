@@ -11,12 +11,12 @@ order-dependent nondeterminism).
 
 Two physical strategies, same semantics:
 
-* :func:`latest_per_key` — ``max_by`` over a struct ordering key with a
-  **salted two-phase reduction**: phase 1 reduces (key, salt) groups
-  map-side-combinable, phase 2 reduces keys. A hot key that would pin one
-  reducer in a window/row_number plan is spread over ``n_salts`` partial
-  groups first. This is an aggregation (partial combine on the map side),
-  strictly cheaper than the window variant's full sort-shuffle.
+* :func:`latest_per_key` — one ``max_by`` aggregation over a struct
+  ordering key. The partial aggregate below the single key exchange combines
+  map-side, so a hot key reaches its reducer as at most one row per map task:
+  skew is bounded without salting. Salting only pays for operators that
+  cannot combine (a window, a join); here it would multiply a hot key's
+  partial rows instead of dividing them.
 * :func:`latest_per_key_window` — the classic
   ``row_number() over (partition by key order by lsn desc ...) = 1`` plan,
   kept for parity testing and for callers that need the loser rows too.
@@ -27,12 +27,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-# op priority breaks exact (lsn, ts) ties deterministically: a delete at the
-# same LSN as an upsert wins (matches "tombstone last" binlog convention).
-_OP_RANK = {"D": 2, "U": 1, "I": 0}
-
-
 def _op_rank_col(op_col: str):
+    # op priority breaks exact (lsn, ts) ties deterministically: a delete at
+    # the same LSN as an upsert wins (matches "tombstone last" binlog
+    # convention).
     return (
         F.when(F.col(op_col) == "D", F.lit(2))
         .when(F.col(op_col) == "U", F.lit(1))
@@ -46,15 +44,9 @@ def latest_per_key(
     lsn_col: str = "lsn",
     ts_col: str = "commit_ts",
     op_col: str = "op",
-    n_salts: int = 32,
 ) -> DataFrame:
-    """Salted two-phase max-LSN reduction to one row per key.
-
-    Phase 1 groups by (key, salt) — duplicates of a hot key are combined
-    map-side and across ``n_salts`` reducers; phase 2 groups by key alone on
-    the already-reduced (≤ n_salts rows/key) stream. Output schema == input
-    schema, one row per key.
-    """
+    """Max-(lsn, commit_ts, op) reduction to one row per key: one shuffle,
+    combined map-side. Output schema == input schema, one row per key."""
     order_key = F.struct(
         F.col(lsn_col).cast("long").alias("lsn"),
         (
@@ -65,15 +57,7 @@ def latest_per_key(
         (_op_rank_col(op_col) if op_col in df.columns else F.lit(0)).alias("op_rank"),
     )
     row = F.struct(*[F.col(c) for c in df.columns])
-    salt = F.pmod(F.xxhash64(*[F.col(c) for c in df.columns if c == lsn_col]), F.lit(n_salts))
-
-    phase1 = (
-        df.withColumn("_salt", salt)
-        .groupBy(key_col, "_salt")
-        .agg(F.max_by(row, order_key).alias("_row"), F.max(order_key).alias("_ord"))
-    )
-    phase2 = phase1.groupBy(key_col).agg(F.max_by(F.col("_row"), F.col("_ord")).alias("_row"))
-    return phase2.select("_row.*")
+    return df.groupBy(key_col).agg(F.max_by(row, order_key).alias("_row")).select("_row.*")
 
 
 def latest_per_key_window(

@@ -5,8 +5,10 @@ This is the engine's driver program (SURVEY §7 step 9). Each epoch:
 1. read the epoch's slice of the change log (partition-pruned parquet scan —
    the log is written partitioned by epoch, see
    :func:`geopetl_spark.sources.cdc_gen.write_cdc_log`);
-2. sanitize payloads (vectorized, JVM-side);
-3. salted two-phase per-key max-LSN dedup;
+2. per-key max-LSN dedup: one map-side-combined aggregation, so a hot key
+   is bounded by the partial combine (at most one row per map task);
+3. sanitize the winners' payloads (vectorized, JVM-side, row by row — so
+   only the deduped rows pay for it);
 4. idempotent MERGE into the lake table (epoch-keyed snapshot commit);
 5. append per-partition lineage + throughput metrics;
 6. advance the checkpoint.
@@ -25,6 +27,7 @@ because the sandbox's change log is a static parquet dir.
 
 from __future__ import annotations
 
+import re
 import time
 from dataclasses import dataclass, field
 
@@ -47,7 +50,6 @@ class IngestConfig:
     lsn_col: str = "lsn"
     op_col: str = "op"
     vocab_size: int | None = None
-    n_salts: int = 32
     sanitize: bool = True
     quarantine: bool = True  # split events with null key/LSN into a
     # side-channel instead of poisoning the MERGE (a null key would
@@ -63,9 +65,22 @@ class EpochResult:
     commit: dict = field(default_factory=dict)
 
 
-def read_epoch(spark: SparkSession, log_path: str, epoch: int) -> DataFrame:
-    """Partition-pruned read of one epoch of the change log."""
-    return spark.read.parquet(log_path).filter(F.col("_epoch_part") == epoch).drop("_epoch_part")
+def read_epoch(spark: SparkSession, log_path: str, epoch: int, log: DataFrame | None = None) -> DataFrame:
+    """Partition-pruned read of one epoch of the change log. ``log`` is the
+    whole log already read from ``log_path``; passing it saves a schema
+    inference per call."""
+    if log is None:
+        log = spark.read.parquet(log_path)
+    return log.filter(F.col("_epoch_part") == epoch).drop("_epoch_part")
+
+
+_EPOCH_DIR = re.compile(r"/_epoch_part=(-?\d+)/")
+
+
+def _log_epochs(log: DataFrame) -> list[int]:
+    """The epochs present in an epoch-partitioned log, from its file index
+    (the ``_epoch_part=N`` directories) — no Spark job."""
+    return sorted({int(m.group(1)) for f in log.inputFiles() if (m := _EPOCH_DIR.search(f))})
 
 
 def apply_epoch(
@@ -78,11 +93,10 @@ def apply_epoch(
 ) -> EpochResult:
     """Apply one micro-batch (usable directly as a foreachBatch body)."""
     t0 = time.time()
-    if cfg.sanitize:
-        batch = sanitize_tokens(batch, vocab_size=cfg.vocab_size)
     # Lineage + poison accounting ride the dedup job as observed metrics
-    # (CollectMetrics): the epoch is scanned exactly ONCE on the clean path —
-    # no separate lineage pre-scan job, no extra job when the batch is clean.
+    # (CollectMetrics) on the raw batch: the epoch is scanned exactly ONCE on
+    # the clean path — no separate lineage pre-scan job, no extra job when
+    # the batch is clean.
     valid_pred = F.col(cfg.key_col).isNotNull() & F.col(cfg.lsn_col).isNotNull()
     obs = Observation()
     metrics = [
@@ -94,14 +108,11 @@ def apply_epoch(
         metrics.append(F.sum(F.when(~valid_pred, 1).otherwise(0)).alias("invalid_rows"))
     observed = batch.observe(obs, *metrics)
     to_merge = observed.filter(valid_pred) if cfg.quarantine else observed
-    t_lineage = time.time()
-    deduped = latest_per_key(
-        to_merge,
-        key_col=cfg.key_col,
-        lsn_col=cfg.lsn_col,
-        op_col=cfg.op_col,
-        n_salts=cfg.n_salts,
-    )
+    deduped = latest_per_key(to_merge, key_col=cfg.key_col, lsn_col=cfg.lsn_col, op_col=cfg.op_col)
+    # the dedup reads only key/lsn/commit_ts/op and sanitizing is row by row,
+    # so sanitizing the winners gives the same rows as sanitizing the batch
+    if cfg.sanitize:
+        deduped = sanitize_tokens(deduped, vocab_size=cfg.vocab_size)
     summary = table.merge(
         deduped,
         epoch_id=epoch,
@@ -132,13 +143,13 @@ def apply_epoch(
             }
         ]
         if n_quarantined:
-            # quarantined rows preserved verbatim for replay/forensics; the
-            # write job exists only on the poison path
+            # quarantined rows preserved verbatim (as they arrived, before
+            # sanitizing) for replay/forensics; the write job exists only on
+            # the poison path
             qdir = f"{cfg.checkpoint_path}/quarantine/epoch={epoch}"
             batch.filter(~valid_pred).write.mode("overwrite").parquet(qdir)
             plineage[0]["rows_note"] = "pre-quarantine counts"
     summary = dict(summary)
-    summary["phase_sec"] = {"lineage": round(t_lineage - t0, 2), "merge": round(t1 - t_lineage, 2)}
     summary["rows_quarantined"] = n_quarantined
     n_rows = sum(p["rows"] for p in plineage)
     if lineage_log is not None:
@@ -164,18 +175,17 @@ def run_ingest(
     ckpt = Checkpoint(cfg.checkpoint_path)
     lineage_log = LineageLog(cfg.checkpoint_path)
 
-    # discover available epochs from the log's partition dirs (metadata-only)
-    epochs = sorted(
-        int(r[0])
-        for r in spark.read.parquet(cfg.log_path).select("_epoch_part").distinct().collect()
-    )
+    # one read of the log: its file index lists the epochs, and every epoch's
+    # slice is filtered from it (no re-inference of the log schema per epoch)
+    log = spark.read.parquet(cfg.log_path)
+    epochs = _log_epochs(log)
     first = start_epoch if start_epoch is not None else ckpt.next_epoch_after(epochs[0] if epochs else 0)
 
     results: list[EpochResult] = []
     for epoch in [e for e in epochs if e >= first]:
         if max_epochs is not None and len(results) >= max_epochs:
             break
-        batch = read_epoch(spark, cfg.log_path, epoch)
+        batch = read_epoch(spark, cfg.log_path, epoch, log=log)
         res = apply_epoch(spark, cfg, table, batch, epoch, lineage_log)
         ckpt.save(last_epoch=epoch, offsets={"log_path": cfg.log_path})
         results.append(res)

@@ -3,11 +3,13 @@
 Carry-overs from the reference's test strategy (SURVEY §5: round-trip
 fidelity, write-without-key, null handling, idempotent re-read) plus the
 CDC-specific cases the north rule adds: out-of-order LSN dedup, exactly-once
-re-commit of the same epoch, additive schema evolution, skew salting
+re-commit of the same epoch, additive schema evolution, hot-key dedup
 correctness, checkpointed replay reproducing byte-identical state.
 """
 
+import datetime as dt
 import os
+import random
 import shutil
 
 import pytest
@@ -88,6 +90,52 @@ def test_salted_dedup_matches_window_dedup(events):
         latest_per_key_window(dedup_exact_events(events)).select("doc_id", "tokens", "n_tok", "source")
     )
     assert a == b
+
+
+def test_one_shuffle_dedup_hot_key_over_partitions(spark):
+    """One hot key spread over several input partitions (so the map-side
+    partial combine sees it in every map task), exact duplicate deliveries,
+    and equal-(lsn, commit_ts) delete/upsert ties: the one-shuffle
+    ``max_by`` agrees with the window formulation, and the tie goes to the
+    delete."""
+    rnd = random.Random(7)
+    t0 = dt.datetime(2024, 1, 1)
+    rows = []
+    for lsn in range(1, 401):  # hot key: 400 changes, the 400th is a D/U tie
+        rows.append(("U", lsn, t0 + dt.timedelta(seconds=lsn), "hot", [lsn, lsn + 1], 2, "s"))
+    rows.append(("D", 400, t0 + dt.timedelta(seconds=400), "hot", None, None, None))
+    # "warm": a D/U tie below a later upsert, and an equal-LSN pair that the
+    # later commit_ts decides
+    rows += [
+        ("U", 500, t0, "warm", [1], 1, "s"),
+        ("D", 500, t0, "warm", None, None, None),
+        ("U", 501, t0, "warm", [2], 1, "s"),
+        ("U", 501, t0 + dt.timedelta(seconds=1), "warm", [3], 1, "s"),
+    ]
+    rows += [("I", 1000 + i, t0, f"cold-{i % 50}", [i], 1, "s") for i in range(200)]
+    rows += [r for r in rows if r[1] % 7 == 0]  # exact duplicate deliveries
+    rnd.shuffle(rows)
+    events = spark.createDataFrame(
+        rows,
+        "op string, lsn long, commit_ts timestamp, doc_id string, tokens array<int>, n_tok int, source string",
+    ).repartition(6)
+    hot_parts = events.filter(F.col("doc_id") == "hot").select(F.spark_partition_id()).distinct().count()
+    assert hot_parts >= 4
+
+    def frozen(df):
+        return {tuple(tuple(v) if isinstance(v, list) else v for v in r) for r in df.collect()}
+
+    got = frozen(latest_per_key(events))
+    # the window plan takes the same total order; dedup_exact_events keeps an
+    # arbitrary row of a same-LSN pair, so it only sees the tie-free keys
+    assert got == frozen(latest_per_key_window(events))
+    no_ties = events.filter(~F.col("doc_id").isin("hot", "warm"))
+    cold = {r for r in got if r[3].startswith("cold-")}
+    assert cold == frozen(latest_per_key_window(dedup_exact_events(no_ties)))
+    by_key = {r[3]: r for r in got}
+    assert len(got) == len(by_key) == 52
+    assert by_key["hot"][:2] == ("D", 400)
+    assert by_key["warm"][4] == (3,)
 
 
 def test_merge_final_state_token_equality(spark, events, tmp_lake):
@@ -256,6 +304,42 @@ def test_pipeline_resume_from_checkpoint(spark, events, tmp_path):
     assert all(e["rows"] > 0 and e["events_per_sec"] > 0 for e in lin)
     assert all(p["max_lsn"] >= p["min_lsn"] for e in lin for p in e["partitions"])
     assert all(e["snapshot_id"] for e in lin)
+
+
+def test_run_ingest_discovers_non_contiguous_epochs(spark, events, tmp_path):
+    """Epochs come from the log's partition directories: a log holding
+    epochs 0, 2 and 5 applies exactly those, a resume applies only the later
+    ones, and a run over a fully checkpointed log launches at most one Spark
+    job (the log's schema inference)."""
+    log = str(tmp_path / "log")
+    (
+        events.filter(F.col("epoch").isin(0, 2, 3))
+        .withColumn("_epoch_part", F.when(F.col("epoch") == 3, 5).otherwise(F.col("epoch")))
+        .write.partitionBy("_epoch_part")
+        .parquet(log)
+    )
+
+    def fresh(tag):
+        tp = str(tmp_path / f"lake-{tag}")
+        LakeTable(spark, tp).create(DOC_SCHEMA, key_col="doc_id", n_buckets=4)
+        return IngestConfig(log_path=log, table_path=tp, checkpoint_path=str(tmp_path / f"ck-{tag}"))
+
+    cfg_a = fresh("a")
+    assert [r.epoch for r in run_ingest(spark, cfg_a)] == [0, 2, 5]
+
+    cfg_b = fresh("b")
+    assert [r.epoch for r in run_ingest(spark, cfg_b, max_epochs=1)] == [0]
+    assert [r.epoch for r in run_ingest(spark, cfg_b)] == [2, 5]
+    assert LakeTable(spark, cfg_a.table_path).checksum() == LakeTable(spark, cfg_b.table_path).checksum()
+
+    sc = spark.sparkContext
+    group = "test-run-ingest-checkpointed"
+    sc.setJobGroup(group, "run_ingest over a fully checkpointed log")
+    try:
+        assert run_ingest(spark, cfg_b) == []
+    finally:
+        sc._jsc.clearJobGroup()
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 1
 
 
 def test_pipeline_with_schema_drift(spark, tmp_path):

@@ -43,11 +43,13 @@ def test_limit_becomes_take_ordered(spark, sf_dir):
     assert "TakeOrderedAndProject" in plan
 
 
-def test_salted_dedup_is_aggregation_not_window_sort(spark, sf_dir):
-    """latest_per_key compiles to two aggregations (partial-combinable), not
-    a window sort — the skew-defeating property (SURVEY §4 custom work #2)."""
+def test_cdc_dedup_is_one_shuffle_combined_aggregation(spark, sf_dir):
+    """latest_per_key compiles to one key exchange with the partial max_by
+    below it — a hot key reaches its reducer as at most one row per map
+    task — and no window sort (SURVEY §4 custom work #2)."""
     plan = _plan(entry.queries()["cdc_latest_state"](spark, sf_dir))
-    assert "max_by" in plan
+    assert plan.count("Exchange hashpartitioning") == 1
+    assert plan.find("partial_max_by") > plan.find("Exchange hashpartitioning")
     assert "Window" not in plan
 
 

@@ -17,20 +17,22 @@ def test_null_key_and_lsn_rows_quarantined(spark, tmp_path):
     cfg = IngestConfig(log_path="unused", table_path=tp, checkpoint_path=str(tmp_path / "ck"))
     batch = spark.createDataFrame(
         [
-            ("I", 1, None, [1], 1, "s"),      # null key  -> quarantine
-            ("I", None, "k2", [2], 1, "s"),   # null LSN  -> quarantine
-            ("I", 3, "k3", [3], 1, "s"),      # valid
+            ("I", 1, None, None, 1, "s"),          # null key  -> quarantine
+            ("I", None, "k2", [2, None], 2, "s"),  # null LSN  -> quarantine
+            ("I", 3, "k3", [3, None], 2, "s"),     # valid
         ],
         "op string, lsn long, doc_id string, tokens array<int>, n_tok int, source string",
     )
     res = apply_epoch(spark, cfg, t, batch, epoch=0, lineage_log=LineageLog(cfg.checkpoint_path))
     assert res.commit["rows_quarantined"] == 2
-    state = {r["doc_id"] for r in t.read().collect()}
-    assert state == {"k3"}  # no junk NULL-key row, no null-LSN row
-    # quarantined rows preserved verbatim for replay/forensics
+    state = {r["doc_id"]: (r["tokens"], r["n_tok"]) for r in t.read().collect()}
+    assert state == {"k3": ([3], 1)}  # no junk NULL-key row, no null-LSN row; sanitized
+    # quarantined rows preserved verbatim (as they arrived, unsanitized) for
+    # replay/forensics
     q = spark.read.parquet(os.path.join(cfg.checkpoint_path, "quarantine", "epoch=0"))
     assert q.count() == 2
-    assert {r["doc_id"] for r in q.collect()} == {None, "k2"}
+    quarantined = {r["doc_id"]: (r["tokens"], r["n_tok"]) for r in q.collect()}
+    assert quarantined == {None: (None, 1), "k2": ([2, None], 2)}
 
     lin = read_lineage(spark, cfg.checkpoint_path)
     row = lin.collect()[0]
